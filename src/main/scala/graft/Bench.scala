@@ -1,7 +1,6 @@
 package graft
 
 import java.io.{FileDescriptor, FileOutputStream, PrintStream}
-import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE machine-parseable JSON line on stdout.
@@ -24,19 +23,11 @@ object Bench {
     System.setOut(toErr) // Java-side printers (Janino, log fallbacks)
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // Console.withOut covers Scala-side println (scala.Console snapshots
     // System.out at classload, so setOut alone isn't enough).
     Console.withOut(toErr) {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+      val spark = GraftSession.builder(GraftSession.envCores)
         // The app-status store retains 1000 jobs / 1000 stages / 100k tasks /
         // 1000 SQL executions by default EVEN WITH THE UI OFF. A ~400-
         // execution suite (98 queries × 3-5 runs, many-small-jobs etl
@@ -62,12 +53,8 @@ object Bench {
       } catch { case _: Throwable => () }
 
       val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-      // Local-iteration filter: comma-separated substrings of query names
-      // (unset = everything, which is what the driver runs).
-      val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-      val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-        only.forall(_.exists(n.contains))
-      }
+      // Local-iteration filter; unset runs every query.
+      val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
       // ≥3 runs per query, report median + min: single-shot numbers on this
       // box carry up to 4-5× suite-order/JIT variance on the worst queries
       // (r3 adjudication: etl_compile_pass 4.2-19.4s, simhash 0.68-2.4s on
@@ -93,19 +80,10 @@ object Bench {
       // BENCH_r07 tail's "lineage truncated" warnings). reclaim (per query)
       // additionally GCs so the ContextCleaner drops unreferenced
       // broadcasts/shuffles; a per-run GC would cost ~400 full collections.
-      def dropLeaked(): Unit = {
-        // NonFatal only: an OOM/linkage error between queries means the JVM
-        // is corrupted and the run's numbers are garbage — let it die.
-        // ORDER MATTERS: the blocking RDD unpersist must run BEFORE
-        // clearCache — clearCache unpersists DataFrame caches with
-        // blocking=false and synchronously removes them from the
-        // persistentRdds map, so a loop running after it would never see
-        // them and their block removal would race the next measurement.
-        try spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        catch { case scala.util.control.NonFatal(_) => () }
-        try spark.sharedState.cacheManager.clearCache() // bookkeeping only now
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      // NonFatal only (inside Meter.reclaim): an OOM/linkage error between
+      // queries means the JVM is corrupted and the run's numbers are
+      // garbage — let it die.
+      def dropLeaked(): Unit = graft.tools.Meter.reclaim(spark)
       def reclaim(name: String): Unit = {
         dropLeaked()
         val leftover = try spark.sparkContext.getPersistentRDDs.size

@@ -18,4 +18,13 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Queries.oracleSql
+
+  /** The queries a `SPARK_GRAFT_ONLY` value selects, sorted by name: the
+    * value is a comma-separated list of substrings of query names; unset
+    * (None) selects every query. Bench and Verify both filter through
+    * this. */
+  def selected(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1).filter { case (name, _) =>
+      only.forall(_.split(",").exists(name.contains))
+    }
 }

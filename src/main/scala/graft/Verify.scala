@@ -1,28 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.tools.Meter
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(GraftSession.envCores)
     new java.io.File(outDir).mkdirs()
-    // Local-iteration subset (the driver never sets this): run only the
-    // named queries, same filter contract as Bench.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    // Local-iteration subset, Bench's filter; unset runs every query.
+    SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY")).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -30,12 +17,8 @@ object Verify {
       }
       // Bench's dropLeaked, same rationale: checkpointed/persisted blocks a
       // query leaks (components loops, classifier epochs, candidate
-      // materialization) must not accumulate across the 140-query dump —
-      // blocking RDD unpersist first, then cache bookkeeping (see Bench).
-      try spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      catch { case scala.util.control.NonFatal(_) => () }
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case scala.util.control.NonFatal(_) => () }
+      // materialization) must not accumulate across the 170-query dump.
+      Meter.reclaim(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

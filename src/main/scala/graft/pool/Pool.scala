@@ -152,40 +152,18 @@ final class Pool private (val spark: SparkSession, val root: Path) {
 
   def isEmpty: Boolean = committedSegments().isEmpty
 
-  /** Merged superset schema of the given committed segments, cached per
-    * manifest state: the footer-merge pass is a (small) distributed job, and
-    * hot paths (ETL runs, resume-offset queries) call `read()` several times
-    * against an unchanged manifest — they should pay for the merge once.
-    * Benign under the single-writer rule; a concurrent reader racing an
-    * append at worst recomputes.
-    */
-  @volatile private var schemaCache: Option[(Seq[String], org.apache.spark.sql.types.StructType)] = None
-
-  private def mergedSchema(segs: Seq[String]): org.apache.spark.sql.types.StructType =
-    schemaCache match {
-      case Some((cached, s)) if cached == segs => s
-      case _ =>
-        val s =
-          if (segs.size == 1) // one segment = one shape; driver-side footer read
-            spark.read.parquet(segPath(segs.head).toString).schema
-          else
-            spark.read.option("mergeSchema", "true")
-              .parquet(segs.map(s => segPath(s).toString): _*).schema
-        schemaCache = Some((segs, s))
-        s
-    }
-
   /** Read the committed pool contents. Segments may carry different record
     * shapes (a heterogeneous pool accretes its superset schema one commit at
     * a time — e.g. Staging after demo batch 3 holds two value shapes), so
-    * the scan uses the merged by-name superset schema (absent fields read
-    * as null); this stays ONE multi-path parquet scan (pushdown + pruning
-    * intact), and the merge itself is cached metadata work.
+    * the scan uses the by-name superset of the cached per-segment schemas
+    * (absent fields read as null), merged on the driver like every other
+    * pool reader; this stays ONE multi-path parquet scan (pushdown +
+    * pruning intact).
     */
   def read(): DataFrame = {
     val segs = committedSegments()
     require(segs.nonEmpty, s"pool $root is empty")
-    spark.read.schema(mergedSchema(segs))
+    spark.read.schema(SchemaUnion.merge(segs.map(segmentSchema)))
       .parquet(segs.map(s => segPath(s).toString): _*)
   }
 

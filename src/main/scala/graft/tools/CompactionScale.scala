@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.pool.Pool
@@ -26,22 +24,7 @@ object CompactionScale {
     val cycles = if (args.length > 0) args(0).toInt else 6
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
-
-    val bytesWritten = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesWritten.addAndGet(t.taskMetrics.outputMetrics.bytesWritten)
-    })
-    def measure[A](f: => A): (A, Long, Double) = {
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      bytesWritten.set(0L)
-      val t0 = System.nanoTime()
-      val a = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      (a, bytesWritten.get(), sec)
-    }
+    val meter = new Meter(spark)
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -63,12 +46,12 @@ object CompactionScale {
       // fat history first, without compaction ticks in the measurement
       (0 until 3).foreach(i => session.ingest(slice(i, seedRows)))
       (0 until cycles).foreach { c =>
-        val (n, bw, sec) = measure {
+        val (n, m) = meter {
           session.ingest(slice(100 + c, batchRows))
         }
         val segs = pool.committedSegments().length
         println(f"[compaction-scale] $label cycle=$c appended=$n " +
-          f"wroteMB=${bw / 1e6}%7.1f segs=$segs sec=$sec%6.2f")
+          f"wroteMB=${m.outputBytes / 1e6}%7.1f segs=$segs sec=${m.sec}%6.2f")
       }
     }
     spark.stop()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.pool.{Envelope, Pool}
@@ -27,22 +25,7 @@ object DeleteScale {
     val rounds = if (args.length > 0) args(0).toInt else 4
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
-
-    val bytesRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
-    def measure[A](f: => A): (A, Long, Double) = {
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      bytesRead.set(0L)
-      val t0 = System.nanoTime()
-      val a = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      (a, bytesRead.get(), sec)
-    }
+    val meter = new Meter(spark)
 
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     def slice(i: Int) = Envelope.wrap(
@@ -67,13 +50,13 @@ object DeleteScale {
 
       // prunable: one row by pool-key offset (lives in the LAST segment)
       val target = (segsGrown.toLong - 1) * 100000000L + 17L
-      val (del1, b1, s1) = measure {
+      val (del1, m1) = meter {
         pool.deleteWhere(col("kafka.offset") === target)
       }
       val rewrote1 = pool.committedSegments().count(_.startsWith("delete-")) -
         segsBefore.count(_.startsWith("delete-"))
       println(f"[delete-scale] segs=$segsGrown%3d rows=$rows%9d " +
-        f"BY-OFFSET: deleted=$del1 readMB=${b1 / 1e6}%8.1f rewroteSegs=$rewrote1 sec=$s1%6.2f")
+        f"BY-OFFSET: deleted=$del1 readMB=${m1.inputBytes / 1e6}%8.1f rewroteSegs=$rewrote1 sec=${m1.sec}%6.2f")
 
       // non-prunable: GDPR-style delete of one USER — user_id is
       // unclustered, so row-group stats cannot prune and the match scan
@@ -81,13 +64,13 @@ object DeleteScale {
       // events landed in (here: all of them — each slice repeats the
       // user), the honest worst case the by-offset leg contrasts with
       val segsMid = pool.committedSegments().length
-      val (del2, b2, s2) = measure {
+      val (del2, m2) = meter {
         pool.deleteWhere(col("value.user_id") === userId)
       }
       val segsAfter = pool.committedSegments().length
       println(f"[delete-scale] segs=$segsGrown%3d rows=$rows%9d " +
-        f"BY-USER:   deleted=$del2%5d readMB=${b2 / 1e6}%8.1f " +
-        f"segs $segsMid->$segsAfter sec=$s2%6.2f")
+        f"BY-USER:   deleted=$del2%5d readMB=${m2.inputBytes / 1e6}%8.1f " +
+        f"segs $segsMid->$segsAfter sec=${m2.sec}%6.2f")
     }
     spark.stop()
   }

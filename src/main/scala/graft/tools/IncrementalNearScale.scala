@@ -15,7 +15,7 @@ import graft.ops.Dedup
   *    the landed read opens only the batch's (band, pfx) partitions, so
   *    probe READ-BYTES should stay ~FLAT as the landed corpus grows
   *    (fixed batch), while both scanning paths grow linearly. The probe's
-  *    bytes are measured with a task-metrics listener and printed per
+  *    bytes are measured with [[Meter]] and printed per
   *    size; index BUILD cost is charged to ingest (it happens once per
   *    append in the session), not the probe.
   *
@@ -32,20 +32,7 @@ object IncrementalNearScale {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(4, 16)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
-
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead)
-    })
-    // listener delivery is async — settle before reading the counter
-    def readBytesWindow[A](body: => A): (A, Long) = {
-      Thread.sleep(500); bytesRead.set(0)
-      val a = body
-      Thread.sleep(500)
-      (a, bytesRead.get())
-    }
+    val meter = new Meter(spark)
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -76,11 +63,11 @@ object IncrementalNearScale {
       val nLd = landed.count()
 
       // recompute path: landed signatures re-derived from text per call
-      val t0 = System.nanoTime()
-      val (kept, release) = Dedup.dedupIncrementalNearManaged(
-        incoming, landed, "id", "text")
-      val nKept = kept.count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val ((nKept, release), mR) = meter {
+        val (kept, release) = Dedup.dedupIncrementalNearManaged(
+          incoming, landed, "id", "text")
+        (kept.count(), release)
+      }
       release()
 
       // presigned path: landed signatures read from a STORED narrow table
@@ -92,36 +79,27 @@ object IncrementalNearScale {
         .write.mode("overwrite").parquet(sigDir)
       val storedSig = Dedup.signatureFrameFromStored(
         spark.read.parquet(sigDir), "id", "sig", numPerms = 16)
-      val t1 = System.nanoTime()
-      val ((nKeptP, presignedBytes), secPAll) = {
-        val s0 = System.nanoTime()
-        val r = readBytesWindow {
-          val (keptP, releaseP) = Dedup.dedupIncrementalNearPresignedManaged(
-            incoming, storedSig, "id", "text")
-          val c = keptP.count(); releaseP(); c
-        }
-        (r, (System.nanoTime() - s0) / 1e9)
+      val (nKeptP, mP) = meter {
+        val (keptP, releaseP) = Dedup.dedupIncrementalNearPresignedManaged(
+          incoming, storedSig, "id", "text")
+        val c = keptP.count(); releaseP(); c
       }
-      val secP = (System.nanoTime() - t1) / 1e9 - 1.0 // minus the two settle sleeps
-      val _ = secPAll
 
       // indexed path: the partition-pruned probe — build charged to ingest
       val idxPath = java.nio.file.Files.createTempDirectory("inc-idx").toString + "/idx"
       val idx = graft.ops.SignatureIndex.create(spark, idxPath,
         n = 3, numPerms = 16, bands = 4, idTypeDdl = "BIGINT")
       idx.rebuild(storedSig, Seq.empty)
-      val t2 = System.nanoTime()
-      val (nKeptI, indexedBytes) = readBytesWindow {
+      val (nKeptI, mI) = meter {
         val (keptI, _, releaseI) = Dedup.dedupIncrementalNearIndexed(
           incoming, idx, "id", "text", threshold = 0.5)
         val c = keptI.count(); releaseI(); c
       }
-      val secI = (System.nanoTime() - t2) / 1e9 - 1.0
 
       landed.unpersist()
       require(nKeptP == nKept, s"presigned diverged: $nKeptP vs $nKept")
       require(nKeptI == nKept, s"indexed diverged: $nKeptI vs $nKept")
-      println(s"""{"landed":$nLd,"incoming":$nIn,"kept":$nKept,"dropped":${nIn - nKept},"recompute_sec":${f"$sec%.2f"},"presigned_sec":${f"$secP%.2f"},"indexed_sec":${f"$secI%.2f"},"presigned_probe_bytes":$presignedBytes,"indexed_probe_bytes":$indexedBytes,"index_pfx_len":${idx.pfxLen},"landed_rows_per_sec":${(nLd / sec).toLong}}""")
+      println(s"""{"landed":$nLd,"incoming":$nIn,"kept":$nKept,"dropped":${nIn - nKept},"recompute_sec":${f"${mR.sec}%.2f"},"presigned_sec":${f"${mP.sec}%.2f"},"indexed_sec":${f"${mI.sec}%.2f"},"presigned_probe_bytes":${mP.inputBytes},"indexed_probe_bytes":${mI.inputBytes},"index_pfx_len":${idx.pfxLen},"landed_rows_per_sec":${(nLd / mR.sec).toLong}}""")
     }
     incoming.unpersist()
     spark.stop()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.pool.Pool
@@ -27,22 +25,7 @@ object IngestLoopScale {
     val batches = if (args.length > 1) args(1).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
-
-    val bytesRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
-    def measure[A](f: => A): (A, Long, Double) = {
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      bytesRead.set(0L)
-      val t0 = System.nanoTime()
-      val a = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      (a, bytesRead.get(), sec)
-    }
+    val meter = new Meter(spark)
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -69,11 +52,11 @@ object IngestLoopScale {
       val novel = i < batches || batches == 1
       val b = (if (novel) slice(seedCopies + i) else slice(seedCopies + batches - 1)).persist()
       val nb = b.count()
-      val (a0, bytes0, sec0) = measure(CorpusIngest.ingestBatch(b, statelessPool, "doc_id", "text"))
-      val (a1, bytes1, sec1) = measure(session.ingest(b))
+      val (a0, m0) = meter(CorpusIngest.ingestBatch(b, statelessPool, "doc_id", "text"))
+      val (a1, m1) = meter(session.ingest(b))
       b.unpersist()
       require(a0 == a1, s"paths diverged at batch $i: $a0 vs $a1")
-      println(s"""{"batch":$i,"novel":$novel,"batch_rows":$nb,"appended":$a0,"stateless_mb_read":${bytes0 / 1000000},"session_mb_read":${bytes1 / 1000000},"stateless_sec":${f"$sec0%.2f"},"session_sec":${f"$sec1%.2f"}}""")
+      println(s"""{"batch":$i,"novel":$novel,"batch_rows":$nb,"appended":$a0,"stateless_mb_read":${m0.inputBytes / 1000000},"session_mb_read":${m1.inputBytes / 1000000},"stateless_sec":${f"${m0.sec}%.2f"},"session_sec":${f"${m1.sec}%.2f"}}""")
     }
     spark.stop()
   }

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-import graft.Queries
+import graft.{GraftSession, Queries}
 
 /** Dev-only: per-Spark-job wall breakdown of ANY declared query, plus the
   * driver-side gaps between jobs (planning/analysis/commit time the job
@@ -21,58 +19,27 @@ object ProfileQuery {
     val name = args.headOption.getOrElse("dedup_incremental_indexed")
     val rounds = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // (t0, desc) per live job; finished rows (jobId, start, end, desc)
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties.getProperty("spark.job.description"))
-          .orElse(Option(j.properties.getProperty("callSite.short")))
-          .getOrElse("?")
-        starts.put(j.jobId, (System.nanoTime(), desc.take(90)))
-      }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        Option(starts.remove(j.jobId)).foreach { case (t0, desc) =>
-          done.add((j.jobId, t0, System.nanoTime(), desc))
-        }
-    })
+    val spark = GraftSession.get()
+    val meter = new Meter(spark)
 
     spark.range(1 << 20).selectExpr("sum(id)").collect() // warmup
 
     val fn = Queries.queries(name)
     for (round <- 1 to rounds) {
-      done.clear()
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      import scala.jdk.CollectionConverters._
-      val rows = done.asScala.toSeq.sortBy(_._2)
-      println(s"--- $name round $round: rows=$n wall=${f"$wall%.2f"}s jobs=${rows.size} ---")
-      var prevEnd = t0
+      val (n, m) = meter(fn(spark, sfDir).count())
+      val jobs = m.timeline
+      println(s"--- $name round $round: rows=$n wall=${f"${m.sec}%.2f"}s jobs=${jobs.size} ---")
+      var prevEnd = m.startNs
       var gapSum = 0.0
-      rows.foreach { case (id, s, e, desc) =>
-        val gap = (s - prevEnd).max(0L) / 1e9
+      jobs.foreach { j =>
+        val gap = (j.startNs - prevEnd).max(0L) / 1e9
         gapSum += gap
-        println(f"  gap ${gap}%5.2fs | job $id%4d ${(e - s) / 1e9}%6.2fs  $desc")
-        prevEnd = math.max(prevEnd, e)
+        println(f"  gap ${gap}%5.2fs | job ${j.id}%4d ${j.sec}%6.2fs  ${j.desc.take(90)}")
+        prevEnd = math.max(prevEnd, j.endNs)
       }
-      val jobSum = rows.map(r => (r._3 - r._2) / 1e9).sum
-      println(f"  sum(jobs)=$jobSum%.2fs  sum(gaps)=$gapSum%.2fs  wall=$wall%.2fs")
-      // between-round reclaim, the Bench discipline
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.sharedState.cacheManager.clearCache()
+      val jobSum = jobs.map(_.sec).sum
+      println(f"  sum(jobs)=$jobSum%.2fs  sum(gaps)=$gapSum%.2fs  wall=${m.sec}%.2fs")
+      Meter.reclaim(spark) // between rounds, the Bench discipline
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.ops.{Dedup, SimilarityIndex}
@@ -38,45 +37,18 @@ import graft.ops.{Dedup, SimilarityIndex}
   */
 object ScaleStep {
 
-  private val sumInput = new AtomicLong(0L)
-  private val maxTaskInput = new AtomicLong(0L)
-  private val sumShufWrite = new AtomicLong(0L)
-
-  private def resetMetrics(): Unit = {
-    sumInput.set(0L); maxTaskInput.set(0L); sumShufWrite.set(0L)
-  }
-
-  private def measure(spark: SparkSession, name: String, scale: Int)
-      (work: => Long): Unit = {
-    org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-    resetMetrics()
-    val t0 = System.nanoTime()
-    val rows = work
-    val wall = (System.nanoTime() - t0) / 1e9
-    org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-    println(f"[scalestep] scale=$scale%2d q=$name%-22s wall=$wall%8.2fs rows=$rows%9d " +
-      f"in=${sumInput.get / 1e9}%7.2fGB maxtask=${maxTaskInput.get / 1e6}%7.1fMB " +
-      f"shuf=${sumShufWrite.get / 1e6}%8.1fMB")
-    // leaked-state hygiene between workloads (the Bench discipline)
-    try spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    catch { case scala.util.control.NonFatal(_) => () }
-    try spark.sharedState.cacheManager.clearCache()
-    catch { case scala.util.control.NonFatal(_) => () }
-  }
-
   def main(args: Array[String]): Unit = {
     val bigScale = if (args.length > 0) args(0).toInt else 10
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) {
-          val in = t.taskMetrics.inputMetrics.bytesRead
-          sumInput.addAndGet(in)
-          maxTaskInput.updateAndGet(m => math.max(m, in))
-          sumShufWrite.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
-    })
+    val meter = new Meter(spark)
+    def measure(name: String, scale: Int)(work: => Long): Unit = {
+      val (rows, m) = meter(work)
+      println(f"[scalestep] scale=$scale%2d q=$name%-22s wall=${m.sec}%8.2fs rows=$rows%9d " +
+        f"in=${m.inputBytes / 1e9}%7.2fGB maxtask=${m.maxTaskInputBytes / 1e6}%7.1fMB " +
+        f"shuf=${m.shuffleWriteBytes / 1e6}%8.1fMB")
+      Meter.reclaim(spark) // leaked-state hygiene between workloads (the Bench discipline)
+    }
     val work = java.nio.file.Files.createTempDirectory("scalestep").toString
 
     // ---- scaled tables, materialized once per scale ------------------
@@ -139,12 +111,12 @@ object ScaleStep {
       println(s"[scalestep] scale=$scale docs=${spark.read.parquet(docsPath).count()} " +
         s"emb=${spark.read.parquet(embPath).count()}")
 
-      measure(spark, "dedup_corpus_clean_lsh", scale) {
+      measure("dedup_corpus_clean_lsh", scale) {
         Dedup.dedupCorpusLsh(textCorpus(docsPath), "id", "text",
           n = 3, numPerms = 16, bands = 4, threshold = 0.5).count()
       }
 
-      measure(spark, "dedup_winnow_jaccard", scale) {
+      measure("dedup_winnow_jaccard", scale) {
         val corpus = textCorpus(docsPath)
         val cand = Dedup.winnowCandidatePairs(corpus, "id", "text",
           k = 3, w = 4, maxDf = 100, minShared = 2)
@@ -153,12 +125,12 @@ object ScaleStep {
           .filter(col("jaccard") >= 0.5).count()
       }
 
-      measure(spark, "dedup_embedding_lsh", scale) {
+      measure("dedup_embedding_lsh", scale) {
         Dedup.embeddingLshPairs(embCorpus(embPath), "vec_id", "v", dims = 64)
           .select("d1", "d2").count()
       }
 
-      measure(spark, "dedup_embedding_lsh_guard", scale) {
+      measure("dedup_embedding_lsh_guard", scale) {
         // the maxBucket guard under the same corpus: bounds the candidate
         // self-join by dropping saturated buckets (recall trade documented
         // on the operator) — the wall/output delta vs the row above IS the
@@ -167,7 +139,7 @@ object ScaleStep {
           maxBucket = 500).select("d1", "d2").count()
       }
 
-      measure(spark, "dedup_embedding_lsh_bits64", scale) {
+      measure("dedup_embedding_lsh_bits64", scale) {
         // the PRIMARY lever: key sizing. 64 bits / 4 bands = 16-bit band
         // keys (65k buckets) — exact-direction near-dups still collide in
         // every band while the saturated-key accidental pairs disperse;
@@ -176,7 +148,7 @@ object ScaleStep {
           bits = 64).select("d1", "d2").count()
       }
 
-      measure(spark, "sim_index_ingest_near", scale) {
+      measure("sim_index_ingest_near", scale) {
         // landed = the whole scaled table; batch scales with the shards
         // (novel slice + planted 1.01-scaled near-copies per shard)
         val base = spark.read.parquet(embPath)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.GraftSession
@@ -31,13 +29,7 @@ object VectorIngestScale {
     val k = if (args.length > 0) args(0).toInt else 16
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
-
-    val bytesRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
+    val meter = new Meter(spark)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"),
@@ -72,13 +64,8 @@ object VectorIngestScale {
 
     def measure(label: String, idx: SimilarityIndex.IvfIndex,
         landed: Long): Unit = {
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      bytesRead.set(0L)
-      val t0 = System.nanoTime()
-      val n = idx.ingestNear(batch, threshold = 0.995, nprobe = 1)
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.GraftColumnsBridge.drainListenerBus(spark)
-      println(f"""{"probe":"$label","landed":$landed,"appended":$n,"sec":$sec%.2f,"gate_mb":${bytesRead.get() / 1e6}%.1f}""")
+      val (n, m) = meter(idx.ingestNear(batch, threshold = 0.995, nprobe = 1))
+      println(f"""{"probe":"$label","landed":$landed,"appended":$n,"sec":${m.sec}%.2f,"gate_mb":${m.inputBytes / 1e6}%.1f}""")
     }
 
     Seq(1, 4, 16).foreach { times =>

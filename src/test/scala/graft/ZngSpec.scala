@@ -2,7 +2,7 @@ package graft
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cli.{Commands, Zng, Zson}
 import graft.pool.Pool
@@ -16,8 +16,11 @@ import graft.pool.Pool
 class ZngSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
 
-  private val demoZson = new String(
-    Files.readAllBytes(Paths.get("/root/reference/demo/batch-1.zson")), UTF_8)
+  // hand-written twin of the demo's first CDC batch (src/test/resources)
+  private val demoZson = {
+    val in = getClass.getResourceAsStream("/demo/batch-1.zson")
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
 
   // ---- helpers to hand-encode frames -------------------------------------
 

@@ -5,6 +5,9 @@ before every commit so the real gate holds no surprises.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [--pandas]
 
+After the per-query results it prints each oracle query's DuckDB time,
+slowest first, then the N/N summary line.
+
 Two modes, BOTH of which must be green before a commit:
   default  — pyarrow + fetchall (typed Python values; catches value bugs)
   --pandas — replicates the DRIVER's path: oracle via duckdb .df() (where
@@ -14,7 +17,7 @@ Two modes, BOTH of which must be green before a commit:
              str(). Every r8/r9 "locally green, driver red" flap lived
              exactly in the gap between these two paths.
 """
-import sys, os, json, hashlib, math, glob
+import sys, os, json, hashlib, math, glob, time
 import duckdb
 import pyarrow.parquet as pq
 
@@ -90,12 +93,22 @@ def pandas_hash(df):
     return h.hexdigest(), len(df)
 
 
-def compare_pandas(con, sql, spark_dir):
+def timed(timings, name, run):
+    """run() under a wall timer; the seconds land in timings[name] even
+    when run() raises."""
+    t0 = time.perf_counter()
+    try:
+        return run()
+    finally:
+        timings[name] = time.perf_counter() - t0
+
+
+def compare_pandas(con, sql, spark_dir, timings, name):
     """Driver-path compare; returns 'OK' or a failure string. Exceptions
     (e.g. pandas sort on unhashable list cells) surface as ERROR — the
     exact class the driver records as an `err` row."""
     sdf = read_spark_pandas(spark_dir)
-    odf = con.execute(sql).df()
+    odf = timed(timings, name, lambda: con.execute(sql).df())
     if sorted(c.lower() for c in sdf.columns) != sorted(c.lower() for c in odf.columns):
         return (f"SCHEMA_MISMATCH spark={sorted(sdf.columns)} "
                 f"oracle={sorted(odf.columns)}")
@@ -116,6 +129,7 @@ def main(sf_dir, out_dir, pandas_mode=False):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     results = {}
+    timings = {}  # oracle query -> DuckDB seconds
     for name, sql in sorted(oracle.items()):
         spark_dir = f"{out_dir}/{name}"
         if not os.path.isdir(spark_dir):
@@ -123,15 +137,17 @@ def main(sf_dir, out_dir, pandas_mode=False):
             continue
         if pandas_mode:
             try:
-                results[name] = compare_pandas(con, sql, spark_dir)
+                results[name] = compare_pandas(con, sql, spark_dir, timings, name)
             except Exception as e:
                 results[name] = f"ERROR: {type(e).__name__}: {e}"
             continue
         try:
             scols, srows = read_spark(spark_dir)
-            orr = con.execute(sql)
-            ocols = [d[0] for d in orr.description]
-            orows = orr.fetchall()
+
+            def run_oracle():
+                r = con.execute(sql)
+                return [d[0] for d in r.description], r.fetchall()
+            ocols, orows = timed(timings, name, run_oracle)
         except Exception as e:
             results[name] = f"ERROR: {e}"
             continue
@@ -156,6 +172,10 @@ def main(sf_dir, out_dir, pandas_mode=False):
     for name, v in sorted(results.items()):
         mark = "✓" if v == "OK" else "✗"
         print(f"{mark} {name}: {v}")
+    print(f"\n[{mode}] DuckDB time per oracle query, slowest first "
+          f"(total {sum(timings.values()):.1f}s):")
+    for name, sec in sorted(timings.items(), key=lambda kv: -kv[1]):
+        print(f"  {sec:8.2f}s  {name}")
     print(f"\n[{mode}] {n_ok}/{len(results)} queries match")
     return 0 if n_ok == len(results) else 1
 
